@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
 import org.apache.spark.sql.functions._
 
 import graft.frontier.{Politeness, SeenSet}
@@ -16,8 +17,13 @@ import graft.model.UrlOps
   *   - `query <name>...`: time individual declared queries (same action as
   *     Bench's per-query loop: .count()), best-of-N with one warm rep.
   *   - `probe <name>`: re-run one of the Bench probe engine functions.
+  *   - `plan <outDir> <query...>`: run each declared query to completion,
+  *     then write its executed plan (the final adaptive plan,
+  *     `isFinalPlan=true`) to `<outDir>/<query>.txt`.
   *
-  * Usage: runMain graft.BenchExtra stages|query|probe [args...]
+  * `stages <outDir>` writes its anti-join and claim plans the same way.
+  *
+  * Usage: runMain graft.BenchExtra stages|query|probe|plan [args...]
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, GRAFT_BENCH_N, GRAFT_REPS.
   */
 object BenchExtra {
@@ -46,6 +52,19 @@ object BenchExtra {
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** Run `df` to completion, discarding its rows like [[noop]], then write
+    * its formatted executed plan to `outDir/name.txt`. The rows go through
+    * `df`'s OWN QueryExecution (a noop write plans a fresh one and leaves
+    * this one's adaptive plan initial), so the dump shows the final plan.
+    */
+  private def dumpFinalPlan(df: DataFrame, outDir: String, name: String): Unit = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name))(qe.toRdd.foreach(_ => ()))
+    val out = java.nio.file.Paths.get(outDir, s"$name.txt")
+    java.nio.file.Files.writeString(out, qe.explainString(FormattedMode))
+    println(s"[benchextra] wrote $out")
+  }
+
   private def timeIt(label: String, reps: Int)(f: => Unit): Double = {
     val tc = System.nanoTime(); f // warm (JIT + codegen) — cold time reported too
     val cold = (System.nanoTime() - tc) / 1e9
@@ -61,7 +80,7 @@ object BenchExtra {
     * materialized inputs Bench uses (same generation, same dirs).
     */
   private def stages(spark: SparkSession, nCand: Long, hostCount: Int,
-      dir: String, reps: Int): Unit = {
+      dir: String, reps: Int, outDir: String): Unit = {
     val (candDir, seenDir, corpusDir) =
       Bench.materializeInputs(spark, nCand, hostCount, dir)
     val seen = spark.read.parquet(seenDir)
@@ -92,14 +111,15 @@ object BenchExtra {
     timeIt("full frontierRound (fetch+extract)", reps) {
       Bench.frontierRound(spark, nCand, hostCount, dir)
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("plans/r06/frontier_antijoin_current.txt"),
-      fresh.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("plans/r06/frontier_claim_current.txt"),
-      claimed.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+    dumpFinalPlan(fresh, outDir, "frontier_antijoin_current")
+    dumpFinalPlan(claimed, outDir, "frontier_claim_current")
+  }
+
+  /** the declared queries among `names` (unknown names are reported). */
+  private def queries(names: Seq[String]) = names.flatMap { n =>
+    val q = SparkEntry.queries.get(n)
+    if (q.isEmpty) System.err.println(s"[benchextra] unknown query: $n")
+    q.map(n -> _)
   }
 
   def main(args: Array[String]): Unit = {
@@ -110,19 +130,16 @@ object BenchExtra {
     val reps = sys.env.getOrElse("GRAFT_REPS", "2").toInt
     val benchDir = s"${System.getProperty("java.io.tmpdir")}/graft-bench-inputs"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(benchDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get("plans/r06"))
+    // plan output dir of `stages` and `plan`
+    lazy val outDir = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(args.lift(1).getOrElse("plans/tmp"))).toString
     val spark = session(cpus)
     mode match {
-      case "stages" => stages(spark, nCand, 2000, benchDir, reps)
+      case "stages" => stages(spark, nCand, 2000, benchDir, reps, outDir)
       case "query" =>
-        val names = args.drop(1).toSeq
-        names.foreach { n =>
-          SparkEntry.queries.get(n) match {
-            case None => System.err.println(s"[benchextra] unknown query: $n")
-            case Some(fn) =>
-              spark.sparkContext.setJobDescription(n)
-              timeIt(n, reps)(fn(spark, sfDir).count())
-          }
+        queries(args.drop(1)).foreach { case (n, fn) =>
+          spark.sparkContext.setJobDescription(n)
+          timeIt(n, reps)(fn(spark, sfDir).count())
         }
       case "probe" =>
         args.drop(1).foreach {
@@ -139,6 +156,10 @@ object BenchExtra {
             val r = Bench.intervalProbe(spark, 4000000L, 40000L, reps)
             println(f"[benchextra] interval scale=${r._1}%.2f naive=${r._2}%.2f")
           case other => System.err.println(s"[benchextra] unknown probe: $other")
+        }
+      case "plan" =>
+        queries(args.drop(2)).foreach { case (n, fn) =>
+          dumpFinalPlan(fn(spark, sfDir), outDir, n)
         }
       case other => System.err.println(s"[benchextra] unknown mode: $other")
     }

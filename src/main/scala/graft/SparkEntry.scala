@@ -36,14 +36,11 @@ object SparkEntry {
     * Results are partitioning-invariant by contract (the driver already
     * runs correctness at 4 cores and the bench at 32).
     */
-  private def tp(s: SparkSession, dir: String, name: String): DataFrame = {
+  private[graft] def tp(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val df = s.read.parquet(path)
     val cores = s.sparkContext.defaultParallelism
-    val maxSplit =
-      try s.conf.get("spark.sql.files.maxPartitionBytes").replace("b", "")
-        .replace("m", "000000").replace("g", "000000000").toLong
-      catch { case _: Throwable => 134217728L }
+    val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
     val bytes =
       try {
         val p = java.nio.file.Paths.get(path)
@@ -232,21 +229,21 @@ object SparkEntry {
           .otherwise(statusOf(col("id"))).as("httpStatus"))
   }
 
-  /** Persisted [[docCorpus]] views, shared across the three queries that
-    * host a real CrawlSession on the driver's documents table
-    * (`q_crawl_e2e`, `q_mode_overwrite`, `q_mode_incremental`): each used
-    * to build + persist + unpersist its own copy, paying the spanify
-    * transform once per query. Keyed by (session, dir, variant) so a stale
-    * session's cached plans are never resurrected.
+  /** Persisted [[docCorpus]] variants (`build`), shared across the queries
+    * that host a real CrawlSession on the driver's documents table
+    * (`q_crawl_e2e`, `q_mode_*`, `q_redirect_*`, `q_status_crawl`,
+    * `q_daemon_queue`): each used to build + persist + unpersist its own
+    * copy, paying the spanify transform once per query. Keyed by (session,
+    * dir, variant) so a stale session's cached plans are never resurrected.
     */
   private val corpusCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
   private def cachedCorpus(s: SparkSession, d: String, variant: String,
-      lastMod: Column => Column): DataFrame =
-    corpusCache.getOrElseUpdate((s, d, variant), docCorpus(s, d, lastMod).persist())
+      build: => DataFrame): DataFrame =
+    corpusCache.getOrElseUpdate((s, d, variant), build.persist())
 
   private def runCrawlT(s: SparkSession, d: String): DataFrame = {
-    val corpus = cachedCorpus(s, d, "id", identity)
+    val corpus = cachedCorpus(s, d, "id", docCorpus(s, d, identity))
     val cfg = CrawlConfig(
       sessionId = "e2e_t",
       seeds = Seq("http://d0.example.com/page/0", "http://d1.example.com/page/1"),
@@ -254,14 +251,9 @@ object SparkEntry {
       rules = Seq(ScrapingRule(".*", properties = Seq(
         PropertyRule("title", SpanText("title"), trimSpaces = true),
         PropertyRule("headings", SpanText("h2"), isArray = true, trimSpaces = true)))))
-    import s.implicits._
-    val robots = s.emptyDataset[RobotsRules].toDF()
-    val work = scratchDir("graft-e2e-t")
-    val session = new CrawlSession(s, cfg, corpus, robots, work, recordOrder = false)
-    session.run()
-    session.docsTable.read().select(
+    runDocsOnly(s, cfg, corpus, "graft-e2e-t", _.select(
       col("url"), col("parentUrl"), col("title"),
-      array_join(col("headings"), " ").as("headings"))
+      array_join(col("headings"), " ").as("headings")))
   }
 
   /** Redirect semantics driver-visible (reference `auto_redirect`,
@@ -280,17 +272,12 @@ object SparkEntry {
     */
   private def runRedirectCrawl(s: SparkSession, d: String,
       follow: Boolean): DataFrame = {
-    val corpus = cachedCorpus2(s, d, "redir",
+    val corpus = cachedCorpus(s, d, "redir",
       docCorpus(s, d, identity,
         redirectOf = id => when(pmod(id, lit(10)) === 8, urlOfId(id + 1)),
         linkOf = (id, i) => pmod(id * 7 + i * 13, lit(250)) * 2))
-    val cfg = CrawlConfig(
-      sessionId = s"redir-$follow",
-      seeds = Seq("http://d0.example.com/page/0", "http://d1.example.com/page/1"),
-      maxDepth = -1, maxAccessCount = 100000L, hostBudgetPerRound = 1000000,
-      http = HttpSettings(autoRedirect = Some(follow)),
-      rules = Seq(ScrapingRule(".*", properties = Seq(
-        PropertyRule("title", SpanText("title"), trimSpaces = true)))))
+    val cfg = reachabilityConfig(s"redir-$follow")
+      .copy(http = HttpSettings(autoRedirect = Some(follow)))
     runDocsOnly(s, cfg, corpus, "graft-redir")
   }
 
@@ -300,31 +287,35 @@ object SparkEntry {
     * children; reachability flows only through 200 pages.
     */
   private def runStatusCrawl(s: SparkSession, d: String): DataFrame = {
-    val corpus = cachedCorpus2(s, d, "status",
+    val corpus = cachedCorpus(s, d, "status",
       docCorpus(s, d, identity,
         statusOf = id => when(pmod(id, lit(7)) === 3, 404)
           .when(pmod(id, lit(7)) === 5, 304).otherwise(200)))
-    val cfg = CrawlConfig(
-      sessionId = "statusflow",
-      seeds = Seq("http://d0.example.com/page/0", "http://d1.example.com/page/1"),
-      maxDepth = -1, maxAccessCount = 100000L, hostBudgetPerRound = 1000000,
-      rules = Seq(ScrapingRule(".*", properties = Seq(
-        PropertyRule("title", SpanText("title"), trimSpaces = true)))))
-    runDocsOnly(s, cfg, corpus, "graft-status")
+    runDocsOnly(s, reachabilityConfig("statusflow"), corpus, "graft-status")
   }
 
-  private def cachedCorpus2(s: SparkSession, d: String, variant: String,
-      build: => DataFrame): DataFrame =
-    corpusCache.getOrElseUpdate((s, d, variant), build.persist())
+  /** title-only crawl from the d0/d1 seeds with unlimited depth and
+    * non-binding budgets: the stored docs are exactly the reachable set.
+    */
+  private def reachabilityConfig(sessionId: String): CrawlConfig = CrawlConfig(
+    sessionId = sessionId,
+    seeds = Seq("http://d0.example.com/page/0", "http://d1.example.com/page/1"),
+    maxDepth = -1, maxAccessCount = 100000L, hostBudgetPerRound = 1000000,
+    rules = Seq(ScrapingRule(".*", properties = Seq(
+      PropertyRule("title", SpanText("title"), trimSpaces = true)))))
 
+  /** Crawl `corpus` to completion in a fresh scratch work dir (no robots)
+    * and return `project` of the docs table.
+    */
   private def runDocsOnly(s: SparkSession, cfg: CrawlConfig,
-      corpus: DataFrame, tmpPrefix: String): DataFrame = {
+      corpus: DataFrame, tmpPrefix: String,
+      project: DataFrame => DataFrame = _.select(col("url"), col("title"))): DataFrame = {
     import s.implicits._
     val robots = s.emptyDataset[RobotsRules].toDF()
     val work = scratchDir(tmpPrefix)
     val session = new CrawlSession(s, cfg, corpus, robots, work, recordOrder = false)
     session.run()
-    session.docsTable.read().select(col("url"), col("title"))
+    project(session.docsTable.read())
   }
 
   /** J2/J3/S8 driver-visible: TWO CrawlSessions share one workDir docs
@@ -386,7 +377,7 @@ object SparkEntry {
     // written; Overwrite would write the identical one)
     val scaffold = scaffoldCache.getOrElseUpdate((s, d, seeds1.toString), {
       val dir = scratchDir("graft-mode-scaffold")
-      val corpus1 = cachedCorpus(s, d, "id", identity)
+      val corpus1 = cachedCorpus(s, d, "id", docCorpus(s, d, identity))
       val s1 = new CrawlSession(s,
         cfg("mode-run1", seedsOf(seeds1), WriteMode.Incremental), corpus1,
         robots, dir, () => t1, recordOrder = false)
@@ -395,7 +386,8 @@ object SparkEntry {
     })
     val work = scratchDir("graft-mode")
     copyTree(scaffold, work)
-    val corpus2 = cachedCorpus(s, d, "mod2", id => id + pmod(id, lit(2)))
+    val corpus2 = cachedCorpus(s, d, "mod2",
+      docCorpus(s, d, id => id + pmod(id, lit(2))))
     val s2 = new CrawlSession(s, cfg("mode-run2", seedsOf(seeds2), mode), corpus2,
       robots, work, () => t2, recordOrder = false)
     s2.run()
@@ -1437,7 +1429,8 @@ object SparkEntry {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$queueDir/jobB.json"), jobFile("jobB", 5))
       val daemon = new graft.streaming.JobDaemon(s,
-        cachedCorpus(s, d, "id", identity), s.emptyDataset[RobotsRules].toDF(),
+        cachedCorpus(s, d, "id", docCorpus(s, d, identity)),
+        s.emptyDataset[RobotsRules].toDF(),
         s"$base/work", queueDir, s"$base/ckpt")
       val query = daemon.start(availableNow = true)
       // a timeout must fail LOUDLY (and stop the stream), not hand the

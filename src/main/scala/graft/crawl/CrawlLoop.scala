@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.extract.{Extractor, RuleCompiler}
-import graft.frontier.{IncrementalSeenBloom, Politeness, SeenSet, SnapshotTable}
+import graft.frontier.{IncrementalSeenBloom, Politeness, SeenSet, SnapshotTable, StateFiles}
 import graft.model._
 
 /** One crawl session: the rebuild of `RiverWeb.crawl()`
@@ -88,22 +88,13 @@ final class CrawlSession(
   private val checkpointPath =
     java.nio.file.Paths.get(s"$workDir/sessions/${config.sessionId}/round.json")
 
+  // round.json: {"frontier": <version>, "seen": <version>}
   private def readCheckpoint(): Option[(Long, Long)] =
-    if (!java.nio.file.Files.exists(checkpointPath)) None
-    else {
-      val json = java.nio.file.Files.readString(checkpointPath)
-      def num(k: String) =
-        ("\"" + k + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(json).map(_.group(1).toLong)
-      for (f <- num("frontier"); s <- num("seen")) yield (f, s)
-    }
+    StateFiles.readLongs(checkpointPath).flatMap(m =>
+      for (f <- m.get("frontier"); s <- m.get("seen")) yield (f, s))
 
-  private def writeCheckpoint(frontierV: Long, seenV: Long): Unit = {
-    val tmp = java.nio.file.Paths.get(s"$checkpointPath.tmp")
-    java.nio.file.Files.writeString(tmp, s"""{"frontier": $frontierV, "seen": $seenV}""")
-    java.nio.file.Files.move(tmp, checkpointPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeCheckpoint(frontierV: Long, seenV: Long): Unit =
+    StateFiles.writeLongs(checkpointPath, "frontier" -> frontierV, "seen" -> seenV)
 
   private val sitemapRe = RuleCompiler.anchored(config.sitemapPattern)
 
@@ -205,15 +196,19 @@ final class CrawlSession(
     */
   def runRound(): Option[RoundResult] = {
     val (v, seenV) = readCheckpoint().getOrElse(return None)
-    val round = frontierTable.metric(v, "round").map(_.toInt).getOrElse(0)
-    val processed = frontierTable.metric(v, "processed").map(_.toLong).getOrElse(0L)
-    val frontierRows = frontierTable.rowsOf(v)
+    // each table's checkpointed snapshot is read once; every gate below
+    // routes on its metrics
+    val snap = frontierTable.snapshot(v).getOrElse(return None)
+    val round = snap.metrics.get("round").fold(0)(_.toInt)
+    val processed = snap.metrics.get("processed").fold(0L)(_.toLong)
+    val frontierRows = snap.rows
     val remaining = config.maxAccessCount - processed
     if (frontierRows == 0 || remaining <= 0) return None
 
-    val frontier = frontierTable.readVersion(v)
-    val seenCount = if (seenV < 0) 0L else seenTable.rowsOf(seenV)
-    val seen = if (seenCount == 0) null else seenTable.readVersion(seenV)
+    val frontier = frontierTable.read(snap)
+    val seenSnap = seenTable.snapshot(seenV).filter(_.rows > 0)
+    val seenCount = seenSnap.fold(0L)(_.rows)
+    val seen = seenSnap.map(seenTable.read).orNull
 
     // --- claim (W1/W2/A2; Z1 robots Crawl-delay as a per-host quota) --------
     val delayBudgets =
@@ -437,7 +432,7 @@ final class CrawlSession(
     // the round becomes visible HERE — one atomic rename for both tables
     writeCheckpoint(newFv, newSv)
     // new-URL count comes free from the seen-commit's segment metric
-    val newUrls = seenTable.metric(newSv, "segmentRows").map(_.toLong).getOrElse(0L)
+    val newUrls = seenTable.metric(newSv, "segmentRows").fold(0L)(_.toLong)
 
     // round claim order for parity tests (small: ≤ claim batch)
     val order =
@@ -458,21 +453,22 @@ final class CrawlSession(
 
   /** Mode-aware document write (RiverWebTest semantics, SURVEY.md §2.1 S8 +
     * §2.3 J2/J3).
-    */
-  /** `shape` re-applies the small-round single-file write layout to the
+    *
+    * `shape` re-applies the small-round single-file write layout to the
     * tombstone/skip-join intermediates Overwrite/Incremental derive from
     * `docs` — their distinct()/join shuffles otherwise fan the write back
     * out to shuffle-partition-many near-empty files.
     */
   private def writeDocs(docs: DataFrame,
       shape: DataFrame => DataFrame = identity): Long = {
-    val hasExisting = !docsTable.isEmpty && docsTable.rowsOf(docsTable.currentVersion) > 0
+    val hasExisting = docsTable.rowsOf(docsTable.currentVersion) > 0
+    // rows of the segment docs commit v added
+    def addedRows(v: Long): Long = docsTable.metric(v, "segmentRows").fold(0L)(_.toLong)
     config.mode match {
       case WriteMode.Default =>
         // Default mode never reads history — no index maintenance (a later
         // Incremental session detects the stale index and rebuilds once)
-        val (_, _) = docsTable.commitAppend(docs)
-        docsTable.metric(docsTable.currentVersion, "segmentRows").map(_.toLong).getOrElse(0L)
+        addedRows(docsTable.commitAppend(docs)._1)
       case WriteMode.Overwrite =>
         // J3: delete-by-url then insert = MERGE, committed as a sequenced
         // delta (url tombstones + new segment) — O(batch) per round instead
@@ -481,21 +477,19 @@ final class CrawlSession(
         // deleted-row count (for exact live-row accounting) comes from the
         // NARROW side index, not a full docs scan.
         if (!hasExisting) {
-          docsTable.commitAppend(docs)
+          val (v, _) = docsTable.commitAppend(docs)
           appendDocsIndex()
-          docsTable.metric(docsTable.currentVersion, "segmentRows")
-            .map(_.toLong).getOrElse(0L)
+          addedRows(v)
         } else {
           val urls = shape(docs.select("url").distinct())
           val matched = docsIndexSource()
             .join(urls, Seq("url"), "left_semi").count()
-          docsTable.commitDeltaTo(docs, urls, docsTable.currentVersion,
-            deletedRows = matched)
-          val v = docsTable.currentVersion
+          val (v, _) = docsTable.commitDeltaTo(docs, urls,
+            docsTable.currentVersion, deletedRows = matched)
           // batch (url, lastModified) pairs, NOT readSegment(v): an
           // internal compaction folds the whole table into segment v
           val idxSeg = docs.select("url", "lastModified")
-          if (indexConsistentBefore(v - 1))
+          if (indexBuiltFrom(v - 1))
             docsIndexTable.commitDeltaTo(idxSeg, urls,
               docsIndexTable.currentVersion,
               Map("docsVersion" -> v.toString),
@@ -504,9 +498,7 @@ final class CrawlSession(
           // segmentRows == the batch unless the commit compacted (then the
           // segment is the whole merged table); docs is persisted, so the
           // fallback count is a cache scan
-          if (docsTable.tombstonesOf(v).nonEmpty)
-            docsTable.metric(v, "segmentRows").map(_.toLong).getOrElse(0L)
-          else docs.count()
+          if (docsTable.tombstonesOf(v).nonEmpty) addedRows(v) else docs.count()
         }
       case WriteMode.Incremental =>
         // J2: skip docs whose lastModified is not newer than what's indexed.
@@ -524,11 +516,9 @@ final class CrawlSession(
                 col("lastModified") > col("i_lastModified"))
               .drop("i_url", "i_lastModified")
           }
-        docsTable.commitAppend(shape(fresh))
-        val written = docsTable.metric(docsTable.currentVersion, "segmentRows")
-          .map(_.toLong).getOrElse(0L)
+        val (v, _) = docsTable.commitAppend(shape(fresh))
         appendDocsIndex()
-        written
+        addedRows(v)
     }
   }
 
@@ -536,17 +526,14 @@ final class CrawlSession(
     * the docs head (metric check), else the docs table itself (index behind
     * — e.g. Default-mode appends — heals on the next index write).
     */
-  private def docsIndexSource(): DataFrame = {
-    val consistent = !docsIndexTable.isEmpty &&
-      docsIndexTable.metric(docsIndexTable.currentVersion, "docsVersion")
-        .contains(docsTable.currentVersion.toString)
-    if (consistent) docsIndexTable.read() else docsTable.read()
-  }
+  private def docsIndexSource(): DataFrame =
+    if (indexBuiltFrom(docsTable.currentVersion)) docsIndexTable.read()
+    else docsTable.read()
 
-  private def indexConsistentBefore(prevDocsVersion: Long): Boolean =
-    !docsIndexTable.isEmpty &&
-      docsIndexTable.metric(docsIndexTable.currentVersion, "docsVersion")
-        .contains(prevDocsVersion.toString)
+  /** whether the side index's head was built from docs version `docsV`. */
+  private def indexBuiltFrom(docsV: Long): Boolean =
+    docsIndexTable.metric(docsIndexTable.currentVersion, "docsVersion")
+      .contains(docsV.toString)
 
   /** append the fresh segment's (url, lastModified) to the index, or rebuild
     * it from the full docs table if it had fallen behind.
@@ -554,7 +541,7 @@ final class CrawlSession(
   private def appendDocsIndex(): Unit = {
     val docsV = docsTable.currentVersion
     val newSeg = docsTable.readSegment(docsV.toString).select("url", "lastModified")
-    if (indexConsistentBefore(docsV - 1))
+    if (indexBuiltFrom(docsV - 1))
       docsIndexTable.commitAppend(newSeg, Map("docsVersion" -> docsV.toString))
     else refreshDocsIndexFull()
   }

@@ -1,10 +1,13 @@
 package graft.frontier
 
+import java.io.{BufferedOutputStream, OutputStream}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /** Snapshot-versioned table shim (S3/Z6) — stands in for Iceberg (no Iceberg
   * runtime jar ships offline; SURVEY.md §7.1). Semantics mirrored:
@@ -30,6 +33,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     the metrics map.
   * The interface is deliberately Iceberg-shaped so a real catalog slots in
   * unchanged on a cluster (atomic rename → Iceberg commit).
+  *
+  * Files ([[StateFiles]] codec): `manifest.json` = `{"current": <v>}`, the
+  * head pointer; `snapshots/<v>/meta.json` = one [[SnapshotTable.Snapshot]]:
+  * `"version"` (number); `"segments"` (live data segments: a local name
+  * under `segments/`, or an absolute dir for a shared ref); `"tombstones"`
+  * (names under `tombstones/`); `"newFiles"` (parquet files of the segment
+  * this commit added); and each metric as a top-level string field — the
+  * store's `"rows"` (live), `"segmentRows"` (added segment), `"tombRows"`
+  * (accumulated tombstones) and `"parentVersion"`, plus the caller's (crawl
+  * `"round"`/`"processed"`/`"claimed"`/`"kind"`, docs index `"docsVersion"`).
   */
 final class SnapshotTable(val root: String, spark: SparkSession,
     // Iceberg-style sequence-aware equality deletes: every data segment is
@@ -53,45 +66,37 @@ final class SnapshotTable(val root: String, spark: SparkSession,
 
   /** current snapshot version, or -1 if never committed. */
   def currentVersion: Long =
-    if (!Files.exists(manifestPath)) -1L
-    else readLong(Files.readString(manifestPath), "current").getOrElse(-1L)
-
-  private def readLong(json: String, key: String): Option[Long] =
-    ("\"" + key + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(json).map(_.group(1).toLong)
+    StateFiles.readLongs(manifestPath).flatMap(_.get("current")).getOrElse(-1L)
 
   private def metaPath(v: Long): Path =
     Paths.get(root, "snapshots", v.toString, "meta.json")
 
+  /** snapshot v as committed, or None if v < 0 or was never written. */
+  def snapshot(v: Long): Option[Snapshot] =
+    if (v < 0 || !Files.exists(metaPath(v))) None else Some(meta(v))
+
+  private def meta(v: Long): Snapshot =
+    StateFiles.parseSnapshot(Files.readString(metaPath(v)))
+
+  /** what a commit on top of `v` extends: snapshot v, or the empty table. */
+  private def parentOf(v: Long): Snapshot =
+    if (v < 0) Snapshot(-1L, Seq.empty, Seq.empty, Seq.empty, Map.empty) else meta(v)
+
   /** live segment dirs of snapshot v. */
-  def segmentsOf(v: Long): Seq[String] = listOf(v, "segments")
+  def segmentsOf(v: Long): Seq[String] = meta(v).segments
 
   /** tombstone segment dirs of snapshot v (rows anti-joined out on read). */
-  def tombstonesOf(v: Long): Seq[String] = listOf(v, "tombstones")
-
-  private def listOf(v: Long, key: String): Seq[String] = {
-    val json = Files.readString(metaPath(v))
-    ("\"" + key + "\"\\s*:\\s*\\[([^\\]]*)\\]").r.findFirstMatchIn(json) match {
-      case Some(m) =>
-        m.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq
-      case None => Seq.empty
-    }
-  }
+  def tombstonesOf(v: Long): Seq[String] = meta(v).tombstones
 
   /** a metric recorded at commit time of snapshot v. */
-  def metric(v: Long, key: String): Option[String] = {
-    if (v < 0 || !Files.exists(metaPath(v))) return None
-    val json = Files.readString(metaPath(v))
-    ("\"" + key + "\"\\s*:\\s*\"([^\"]*)\"").r.findFirstMatchIn(json).map(_.group(1))
-  }
+  def metric(v: Long, key: String): Option[String] =
+    snapshot(v).flatMap(_.metrics.get(key))
 
   /** LIVE rows of snapshot v (data rows minus tombstoned rows). */
-  def rowsOf(v: Long): Long =
-    metric(v, "rows").map(_.toLong).getOrElse(0L)
+  def rowsOf(v: Long): Long = snapshot(v).fold(0L)(_.rows)
 
   /** cumulative tombstone rows carried by snapshot v. */
-  def tombRowsOf(v: Long): Long =
-    metric(v, "tombRows").map(_.toLong).getOrElse(0L)
+  def tombRowsOf(v: Long): Long = snapshot(v).fold(0L)(_.tombRows)
 
   def isEmpty: Boolean = currentVersion < 0
 
@@ -122,25 +127,25 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   private def segPath(s: String): String =
     if (s.startsWith("/")) s else s"$root/segments/$s"
 
-  /** Merge-on-read: union of live data segments, minus tombstoned rows.
-    * Up to [[broadcastTombRows]] accumulated tombstones the anti-join
-    * broadcasts the tombstone side — a map-side BroadcastHashJoin that
-    * never shuffles the (possibly 10^10-row) data. Above the budget it
+  def readVersion(v: Long): DataFrame = read(meta(v))
+
+  /** Merge-on-read of snapshot `s`: union of live data segments, minus
+    * tombstoned rows. Up to [[broadcastTombRows]] accumulated tombstones the
+    * anti-join broadcasts the tombstone side — a map-side BroadcastHashJoin
+    * that never shuffles the (possibly 10^10-row) data. Above the budget it
     * falls back to a shuffled anti-join: one extra exchange of the live
     * rows per read, which is what lets the compaction cap scale with
     * table size instead of forcing a full rewrite every ~1M claims
     * (the 10^10-frontier amortization fix; Iceberg readers make the same
     * broadcast-vs-shuffle call on equality-delete files).
     */
-  def readVersion(v: Long): DataFrame = {
+  def read(s: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
-    val segs = segmentsOf(v)
-    val data = readParquet(segs.map(segPath))
-    val tombs = tombstonesOf(v)
-    if (tombs.isEmpty) { if (sequenced) data.drop(SeqCol) else data }
+    val data = readParquet(s.segments.map(segPath))
+    if (s.tombstones.isEmpty) { if (sequenced) data.drop(SeqCol) else data }
     else {
-      val tomb = spark.read.parquet(tombs.map(t => s"$root/tombstones/$t"): _*)
-      val tside = if (tombRowsOf(v) <= broadcastTombRows) broadcast(tomb) else tomb
+      val tomb = spark.read.parquet(s.tombstones.map(t => s"$root/tombstones/$t"): _*)
+      val tside = if (s.tombRows <= broadcastTombRows) broadcast(tomb) else tomb
       if (!sequenced)
         data.join(tside, tomb.columns.toSeq, "left_anti")
       else {
@@ -174,12 +179,8 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     // referenced files carry the WRITER's columns — they would lack this
     // table's __seq stamp and break the sequenced tombstone rule
     require(!sequenced, "commitAppendRef is incompatible with sequenced tables")
-    val prev = if (parentVersion < 0) Seq.empty else segmentsOf(parentVersion)
-    val prevRows = if (parentVersion < 0) 0L else rowsOf(parentVersion)
-    val prevTombs = if (parentVersion < 0) Seq.empty else tombstonesOf(parentVersion)
-    val prevTombRows = if (parentVersion < 0) 0L else tombRowsOf(parentVersion)
-    commitManifest(absSegmentDir, metrics, appendTo = prev, prevRows = prevRows,
-      tombSegs = prevTombs, tombRows = prevTombRows)
+    val p = parentOf(parentVersion)
+    commitManifest(absSegmentDir, metrics, p.segments, p.rows, p.tombstones, p.tombRows)
   }
 
   def commitFull(df: DataFrame, metrics: Map[String, String] = Map.empty): (Long, Long) =
@@ -196,14 +197,10 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     */
   def commitAppendTo(df: DataFrame, parentVersion: Long,
       metrics: Map[String, String] = Map.empty): (Long, Long) = {
-    val prev = if (parentVersion < 0) Seq.empty else segmentsOf(parentVersion)
-    val prevRows = if (parentVersion < 0) 0L else rowsOf(parentVersion)
     // carry the parent's tombstones forward — an append must not resurrect
     // logically deleted rows
-    val prevTombs = if (parentVersion < 0) Seq.empty else tombstonesOf(parentVersion)
-    val prevTombRows = if (parentVersion < 0) 0L else tombRowsOf(parentVersion)
-    commit(df, metrics, appendTo = prev, prevRows = prevRows,
-      tombSegs = prevTombs, tombRows = prevTombRows)
+    val p = parentOf(parentVersion)
+    commit(df, metrics, p.segments, p.rows, p.tombstones, p.tombRows)
   }
 
   /** Delta transition anchored at `parentVersion`: append `newRows` as a
@@ -220,15 +217,15 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * an absolute cap forced a full rewrite every ~1M claims ≈ 10^4 rows
     * per claim). Reads between compactions stay broadcast-anti-join up to
     * [[broadcastTombRows]] tombstones and shuffled-anti-join beyond.
-    */
-  /** `deletedRows` — how many LIVE rows the tombstones actually match, for
+    *
+    * `deletedRows` — how many LIVE rows the tombstones actually match, for
     * exact row accounting. Default -1 means "tombstones match 1:1" (the
     * frontier claim case, where every tombstoned key exists exactly once);
     * sequenced replace-style callers pass the measured count because a
     * tombstoned key may match 0 (first write of a url) or several
     * (Default-mode duplicate appends) live rows.
-    */
-  /** `tombstoneRowsHint` ≥ 0: the caller's exact tombstone row count
+    *
+    * `tombstoneRowsHint` ≥ 0: the caller's exact tombstone row count
     * (e.g. the crawl round's claim count — tombstones are 1:1 there).
     * When the hint predicts NO compaction, the tombstone and data-segment
     * writes run CONCURRENTLY (two independent Spark jobs — guide §2.6);
@@ -242,45 +239,33 @@ final class SnapshotTable(val root: String, spark: SparkSession,
       metrics: Map[String, String] = Map.empty,
       deletedRows: Long = -1L,
       tombstoneRowsHint: Long = -1L): (Long, Long) = {
-    import org.apache.spark.sql.functions.{broadcast, lit}
+    import org.apache.spark.sql.functions.broadcast
     val v = currentVersion + 1
-    val prevRows = if (parentVersion < 0) 0L else rowsOf(parentVersion)
-    val prevTombRows = if (parentVersion < 0) 0L else tombRowsOf(parentVersion)
-    val compactionBudget = math.max(4096L, prevRows / 4)
+    val p = parentOf(parentVersion)
+    val compactionBudget = math.max(4096L, p.rows / 4)
+    val segDir = s"$root/segments/$v"
     val tombDir = s"$root/tombstones/$v"
-    val stamped =
-      if (sequenced) tombstones.withColumn(SeqCol, lit(v)) else tombstones
-    var segPreWritten = false
-    if (tombstoneRowsHint >= 0 &&
-        prevTombRows + tombstoneRowsHint <= compactionBudget) {
-      // hint predicts the delta path → the data segment is needed either
-      // way; write it concurrently with the tombstones
-      val segDir = s"$root/segments/$v"
-      val segOut =
-        if (sequenced) newRows.withColumn(SeqCol, lit(v)) else newRows
+    // hint predicts the delta path → the data segment is needed either
+    // way; write it concurrently with the tombstones. Otherwise write the
+    // tombstone segment alone first: its footer count drives the
+    // compaction decision (no Spark count() job, no trusting the caller)
+    val segPreWritten = tombstoneRowsHint >= 0 &&
+      p.tombRows + tombstoneRowsHint <= compactionBudget
+    if (segPreWritten) {
       val tombF = scala.concurrent.Future {
-        stamped.write.mode("overwrite").parquet(tombDir)
+        stamp(tombstones, v).write.mode("overwrite").parquet(tombDir)
       }(SnapshotTable.writeEc)
-      segOut.write.mode("overwrite").parquet(segDir)
+      stamp(newRows, v).write.mode("overwrite").parquet(segDir)
       scala.concurrent.Await.result(tombF,
         scala.concurrent.duration.Duration.Inf)
-      segPreWritten = true
-    } else {
-      // write the tombstone segment first; its footer count drives the
-      // compaction decision (no Spark count() job, no trusting the caller)
-      stamped.write.mode("overwrite").parquet(tombDir)
-    }
+    } else stamp(tombstones, v).write.mode("overwrite").parquet(tombDir)
     val newTombRows = dirRowCount(tombDir)
     val deleted = if (deletedRows >= 0) deletedRows else newTombRows
-    val totalTomb = prevTombRows + newTombRows
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) listDir(p).foreach(rm)
-      Files.deleteIfExists(p)
-    }
-    if (totalTomb > math.max(4096L, prevRows / 4)) {
+    val totalTomb = p.tombRows + newTombRows
+    if (totalTomb > compactionBudget) {
       // a wrong hint pre-wrote the delta segment — reclaim it (it was
       // never referenced by any manifest)
-      if (segPreWritten) rm(Paths.get(s"$root/segments/$v"))
+      if (segPreWritten) rmTree(Paths.get(segDir))
       // compact: parent live rows minus the fresh tombstones, plus newRows.
       // readVersion(parent) already applied older tombstones (and dropped
       // __seq for sequenced tables); the fresh ones apply by key alone —
@@ -294,43 +279,45 @@ final class SnapshotTable(val root: String, spark: SparkSession,
         org.apache.spark.sql.functions.col(c)): _*))
       val out = commit(merged, metrics, appendTo = Seq.empty, prevRows = 0L)
       // the tombstone dir is orphaned by the full rewrite — reclaim it
-      rm(Paths.get(tombDir))
+      rmTree(Paths.get(tombDir))
       out
     } else {
-      val prevSegs = if (parentVersion < 0) Seq.empty else segmentsOf(parentVersion)
-      val prevTombs = if (parentVersion < 0) Seq.empty else tombstonesOf(parentVersion)
-      if (segPreWritten)
-        // segment already on disk from the concurrent write — manifest only
-        commitManifest(v.toString, metrics, appendTo = prevSegs,
-          prevRows = prevRows - deleted,
-          tombSegs = prevTombs :+ v.toString, tombRows = totalTomb,
-          expectVersion = v)
-      else commit(newRows, metrics, appendTo = prevSegs,
-        prevRows = prevRows - deleted,
-        tombSegs = prevTombs :+ v.toString, tombRows = totalTomb,
-        expectVersion = v)
+      val tombSegs = p.tombstones :+ v.toString
+      if (segPreWritten) // segment already on disk from the concurrent write
+        commitManifest(v.toString, metrics, p.segments, p.rows - deleted,
+          tombSegs, totalTomb, expectVersion = v)
+      else commit(newRows, metrics, p.segments, p.rows - deleted,
+        tombSegs, totalTomb, expectVersion = v)
     }
   }
 
-  private def dirRowCount(dir: String): Long =
+  /** `df` with the hidden sequence column of version v, on sequenced tables. */
+  private def stamp(df: DataFrame, v: Long): DataFrame =
+    if (sequenced) df.withColumn(SeqCol, org.apache.spark.sql.functions.lit(v))
+    else df
+
+  private def parquetFiles(dir: String): Seq[String] =
     listDir(Paths.get(dir))
       .map(_.getFileName.toString).filter(_.endsWith(".parquet")).sorted
-      .map(f => footerRowCount(s"$dir/$f")).sum
+
+  private def dirRowCount(dir: String): Long =
+    parquetFiles(dir).map(f => footerRowCount(s"$dir/$f")).sum
+
+  /** the version the next commit creates; `expect` ≥ 0 asserts it. */
+  private def nextVersion(expect: Long): Long = {
+    val v = currentVersion + 1
+    require(expect < 0 || expect == v,
+      s"concurrent commit detected: expected $expect, at $v")
+    v
+  }
 
   private def commit(df: DataFrame, metrics: Map[String, String],
       appendTo: Seq[String], prevRows: Long,
       tombSegs: Seq[String] = Seq.empty, tombRows: Long = 0L,
       expectVersion: Long = -1L): (Long, Long) = {
-    val v = currentVersion + 1
-    require(expectVersion < 0 || expectVersion == v,
-      s"concurrent commit detected: expected $expectVersion, at $v")
-    val seg = v.toString
-    val segDir = s"$root/segments/$seg"
-    val out =
-      if (sequenced) df.withColumn(SeqCol, org.apache.spark.sql.functions.lit(v))
-      else df
-    out.write.mode("overwrite").parquet(segDir)
-    commitManifest(seg, metrics, appendTo, prevRows, tombSegs, tombRows,
+    val v = nextVersion(expectVersion)
+    stamp(df, v).write.mode("overwrite").parquet(s"$root/segments/$v")
+    commitManifest(v.toString, metrics, appendTo, prevRows, tombSegs, tombRows,
       expectVersion = v)
   }
 
@@ -344,42 +331,20 @@ final class SnapshotTable(val root: String, spark: SparkSession,
       appendTo: Seq[String], prevRows: Long,
       tombSegs: Seq[String] = Seq.empty, tombRows: Long = 0L,
       expectVersion: Long = -1L): (Long, Long) = {
-    val v = currentVersion + 1
-    require(expectVersion < 0 || expectVersion == v,
-      s"concurrent commit detected: expected $expectVersion, at $v")
+    val v = nextVersion(expectVersion)
     val segDir = segPath(segEntry)
-    val files = listDir(Paths.get(segDir))
-      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).sorted
+    val files = parquetFiles(segDir)
     val segRows = files.map(f => footerRowCount(s"$segDir/$f")).sum
     val rows = prevRows + segRows
-    val segs = appendTo :+ segEntry
-    val metricsJson = (metrics ++ Map(
-      "parentVersion" -> currentVersion.toString,
+    val snap = Snapshot(v, appendTo :+ segEntry, tombSegs, files, metrics ++ Map(
+      "parentVersion" -> (v - 1).toString,
       "rows" -> rows.toString,
       "segmentRows" -> segRows.toString,
       "tombRows" -> tombRows.toString))
-      .toSeq.sortBy(_._1)
-      .map { case (k, q) => s""""$k": "${q.replace("\"", "'")}"""" }
-      .mkString(",\n  ")
-    val segsJson = segs.map(s => s""""$s"""").mkString("[", ",", "]")
-    val tombsJson = tombSegs.map(s => s""""$s"""").mkString("[", ",", "]")
-    val filesJson = files.map(f => s""""$f"""").mkString("[", ",", "]")
     Files.createDirectories(metaPath(v).getParent)
-    Files.writeString(metaPath(v),
-      s"""{\n  "version": $v,\n  $metricsJson,\n  "segments": $segsJson,\n  "tombstones": $tombsJson,\n  "newFiles": $filesJson\n}\n""")
-    val tmp = Paths.get(root, s".manifest.$v.tmp")
-    Files.writeString(tmp, s"""{"current": $v}""")
-    Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Files.writeString(metaPath(v), StateFiles.renderSnapshot(snap))
+    StateFiles.writeLongs(manifestPath, "current" -> v)
     (v, rows)
-  }
-
-  /** Files.list with the stream closed (it holds a directory fd open —
-    * leaking one per commit starves a long-running daemon of fds).
-    */
-  private def listDir(p: Path): Seq[Path] = {
-    val st = Files.list(p)
-    try st.iterator().asScala.toSeq finally st.close()
   }
 
   private def footerRowCount(file: String): Long = {
@@ -396,9 +361,8 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * anchors at the checkpointed version ≥ `from`) could still read.
     */
   def referencedEntries(from: Long): (Set[String], Set[String]) = {
-    val vs = (math.max(0L, from) to currentVersion)
-      .filter(v => Files.exists(metaPath(v)))
-    (vs.flatMap(segmentsOf).toSet, vs.flatMap(tombstonesOf).toSet)
+    val snaps = (math.max(0L, from) to currentVersion).flatMap(snapshot)
+    (snaps.flatMap(_.segments).toSet, snaps.flatMap(_.tombstones).toSet)
   }
 
   /** Expire storage not referenced by any snapshot ≥ `from` (the Iceberg
@@ -418,17 +382,10 @@ final class SnapshotTable(val root: String, spark: SparkSession,
           p.stripPrefix(s"$root/segments/")
       }
     def sweep(kind: String, keep: Set[String]): Int = {
-      var n = 0
-      listDir(Paths.get(root, kind)).foreach { p =>
-        if (!keep.contains(p.getFileName.toString)) {
-          def rm(q: Path): Unit = {
-            if (Files.isDirectory(q)) listDir(q).foreach(rm)
-            Files.deleteIfExists(q)
-          }
-          rm(p); n += 1
-        }
-      }
-      n
+      val dead = listDir(Paths.get(root, kind))
+        .filterNot(p => keep.contains(p.getFileName.toString))
+      dead.foreach(rmTree)
+      dead.size
     }
     val deletedSegs = sweep("segments", keepSegs)
     val deletedTombs = sweep("tombstones", tombs.filterNot(_.startsWith("/")))
@@ -440,18 +397,27 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   }
 
   /** Drop the whole table (S9 cleanup sink, RiverWeb.java:482-508). */
-  def drop(): Unit = {
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) listDir(p).foreach(rm)
-      Files.deleteIfExists(p)
-    }
-    rm(Paths.get(root))
-  }
+  def drop(): Unit = rmTree(Paths.get(root))
 }
 
 object SnapshotTable {
   /** hidden per-segment sequence column of `sequenced` tables. */
   val SeqCol = "__seq"
+
+  /** One committed snapshot, the typed `snapshots/<v>/meta.json` (keys on
+    * [[SnapshotTable]]); `metrics` holds every string field.
+    */
+  final case class Snapshot(
+      version: Long,
+      segments: Seq[String],
+      tombstones: Seq[String],
+      newFiles: Seq[String],
+      metrics: Map[String, String]) {
+    /** live rows (data rows minus tombstoned rows). */
+    def rows: Long = metrics.get("rows").fold(0L)(_.toLong)
+    /** accumulated tombstone rows. */
+    def tombRows: Long = metrics.get("tombRows").fold(0L)(_.toLong)
+  }
 
   /** driver pool for the concurrent tombstone+segment delta write
     * ([[SnapshotTable.commitDeltaTo]] with a tombstone-rows hint).
@@ -473,4 +439,82 @@ object SnapshotTable {
 
   def apply(root: String)(implicit spark: SparkSession): SnapshotTable =
     new SnapshotTable(root, spark)
+
+  /** Files.list with the stream closed (it holds a directory fd open —
+    * leaking one per commit starves a long-running daemon of fds).
+    */
+  private def listDir(p: Path): Seq[Path] = {
+    val st = Files.list(p)
+    try st.iterator().asScala.toSeq finally st.close()
+  }
+
+  /** delete a file or a directory tree (missing is fine). */
+  private def rmTree(p: Path): Unit = {
+    if (Files.isDirectory(p)) listDir(p).foreach(rmTree)
+    Files.deleteIfExists(p)
+  }
+}
+
+/** The one codec for crawl state files: snapshot metas, and the flat
+  * number-valued records (a table's `manifest.json` head pointer, the
+  * crawl's `round.json` checkpoint) — json4s-jackson, like the config
+  * loader. Also the one atomic replace (write a sibling temp file, then
+  * rename over the target) those pointers and the seen-bloom sidecar use.
+  */
+private[graft] object StateFiles {
+  import SnapshotTable.Snapshot
+
+  def parseSnapshot(json: String): Snapshot = {
+    val fields = objectFields(json)
+    def list(key: String): Seq[String] = fields.collectFirst {
+      case (`key`, JArray(xs)) => xs.collect { case JString(s) => s }
+    }.getOrElse(Seq.empty)
+    Snapshot(longsOf(fields).getOrElse("version", -1L),
+      list("segments"), list("tombstones"), list("newFiles"),
+      fields.collect { case (k, JString(s)) => k -> s }.toMap)
+  }
+
+  /** `version` first, the metrics in key order, then the three lists. */
+  def renderSnapshot(s: Snapshot): String = {
+    def strs(xs: Seq[String]) = JArray(xs.map(JString(_)).toList)
+    JsonMethods.pretty(JObject(
+      ("version" -> JLong(s.version)) ::
+        s.metrics.toList.sortBy(_._1).map { case (k, q) => k -> JString(q) } :::
+        List("segments" -> strs(s.segments), "tombstones" -> strs(s.tombstones),
+          "newFiles" -> strs(s.newFiles)))) + "\n"
+  }
+
+  /** the number fields of a flat JSON object file; None if it is absent. */
+  def readLongs(path: Path): Option[Map[String, Long]] =
+    if (!Files.exists(path)) None
+    else Some(longsOf(objectFields(Files.readString(path))))
+
+  /** atomically replace `path` with a flat JSON object of numbers. */
+  def writeLongs(path: Path, fields: (String, Long)*): Unit =
+    atomicWrite(path)(_.write(JsonMethods.compact(JObject(fields.map {
+      case (k, n) => JField(k, JLong(n))
+    }.toList)).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+
+  /** write `path` via a sibling temp file renamed over it: readers (and a
+    * resume after a crash) see the old content or the new, never a torn file.
+    */
+  def atomicWrite(path: Path)(write: OutputStream => Unit): Unit = {
+    val tmp = path.resolveSibling(s".${path.getFileName}.tmp")
+    val out = new BufferedOutputStream(Files.newOutputStream(tmp))
+    try write(out) finally out.close()
+    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  private def objectFields(json: String): List[(String, JValue)] =
+    JsonMethods.parse(json) match {
+      case JObject(fs) => fs
+      case _ => Nil
+    }
+
+  private def longsOf(fields: List[(String, JValue)]): Map[String, Long] =
+    fields.collect {
+      case (k, JInt(n)) => k -> n.toLong
+      case (k, JLong(n)) => k -> n
+    }.toMap
 }

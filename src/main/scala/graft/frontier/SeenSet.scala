@@ -244,23 +244,17 @@ final class IncrementalSeenBloom(table: SnapshotTable, fpp: Double = 0.03) {
   private def segmentBloom(seg: String): BloomFilter =
     table.readSegment(seg).stat.bloomFilter("urlHash", capacity, fpp)
 
-  // sidecar layout: version line, capacity line, segment list line, then the
+  // sidecar layout: version, capacity, the covered segment entries one per
+  // line (an absolute shared-ref entry may contain commas), then the
   // serialized filter. Best-effort on both ends — a missing/corrupt sidecar
   // just means one rebuild scan.
   private def saveSidecar(): Unit =
-    try {
-      val tmp = java.nio.file.Paths.get(table.root, ".bloom.tmp")
-      val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-        java.nio.file.Files.newOutputStream(tmp)))
-      try {
-        out.writeLong(coveredVersion)
-        out.writeLong(capacity)
-        out.writeUTF(coveredSegments.toSeq.sorted.mkString(","))
-        filter.get.writeTo(out)
-      } finally out.close()
-      java.nio.file.Files.move(tmp, sidecar,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    try StateFiles.atomicWrite(sidecar) { os =>
+      val out = new java.io.DataOutputStream(os)
+      out.writeLong(coveredVersion)
+      out.writeLong(capacity)
+      out.writeUTF(coveredSegments.toSeq.sorted.mkString("\n"))
+      filter.get.writeTo(out)
     } catch { case _: java.io.IOException => () }
 
   private def loadSidecar(): Unit =
@@ -271,7 +265,7 @@ final class IncrementalSeenBloom(table: SnapshotTable, fpp: Double = 0.03) {
       try {
         coveredVersion = in.readLong()
         capacity = in.readLong()
-        coveredSegments = in.readUTF().split(",").filter(_.nonEmpty).toSet
+        coveredSegments = in.readUTF().split("\n").filter(_.nonEmpty).toSet
         filter = Some(BloomFilter.readFrom(in))
       } finally in.close()
     } catch { case _: java.io.IOException =>
