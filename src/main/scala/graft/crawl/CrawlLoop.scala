@@ -2,6 +2,9 @@ package graft.crawl
 
 import java.sql.Timestamp
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -195,6 +198,35 @@ final class CrawlSession(
     * complete (empty frontier or access budget exhausted, Z4/Z5).
     */
   def runRound(): Option[RoundResult] = {
+    val scope = new RoundScope
+    try runRound(scope) finally scope.close()
+  }
+
+  /** What a round holds until it ends, completed or failed: the
+    * intermediates it persisted and its in-flight docs commit. A failed
+    * round must release them too — the daemon keeps the session polling.
+    */
+  private final class RoundScope {
+    private val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private var docsCommit: Option[Future[Long]] = None
+
+    def persist(df: DataFrame): DataFrame = { cached += df; df.persist() }
+
+    def commitDocs(write: => Long): Future[Long] = {
+      val f = Future(write)(CrawlSession.docsCommitEc)
+      docsCommit = Some(f)
+      f
+    }
+
+    // the docs commit reads the persisted fetch/docs sets — let it settle
+    // before they are released
+    def close(): Unit = {
+      docsCommit.foreach(Await.ready(_, Duration.Inf))
+      cached.foreach(_.unpersist())
+    }
+  }
+
+  private def runRound(scope: RoundScope): Option[RoundResult] = {
     val (v, seenV) = readCheckpoint().getOrElse(return None)
     // each table's checkpointed snapshot is read once; every gate below
     // routes on its metrics
@@ -229,14 +261,13 @@ final class CrawlSession(
     // remaining budget (claim ⊆ frontier ⇒ |claim| ≤ frontierRows ≤
     // remaining) — skip the TakeOrdered stage those rounds pay for nothing
     val capRemaining = if (remaining >= frontierRows) Long.MaxValue else remaining
-    val claimed = delayBudgets
+    val claimed = scope.persist(delayBudgets
       .map(b => Politeness.claimWithHostBudgets(
         frontier, config.hostBudgetPerRound, b, capRemaining, saltBuckets = salt))
       .getOrElse(Politeness.claim(frontier, config.hostBudgetPerRound,
-        capRemaining, saltBuckets = salt))
-      .persist()
-    val claimedCount = timed("claim-count")(claimed.count())
-    if (claimedCount == 0) { claimed.unpersist(); return None }
+        capRemaining, saltBuckets = salt)))
+    val claimedCount = claimed.count()
+    if (claimedCount == 0) return None
     // Small rounds write ONE file per snapshot instead of shuffle-partition
     // many near-empty ones: parquet task-commit overhead dominates
     // small-crawl round latency (~0.3-0.5 s per tiny write at 32
@@ -265,7 +296,7 @@ final class CrawlSession(
       if (corpus.columns.contains("httpStatus"))
         coalesce(corpus("httpStatus"), lit(200))
       else lit(200)
-    val fetched = fetchJoin(corpus, claimed, claimedCount)
+    val fetched = scope.persist(fetchJoin(corpus, claimed, claimedCount)
       .select(
         claimed("url"), claimed("parentUrl"), claimed("depth"),
         claimed("urlHash"), claimed("host").as("claimHost"),
@@ -277,8 +308,7 @@ final class CrawlSession(
           .as("contentLength"),
         pmod(claimed("urlHash"), lit(500)).as("executionTime"),
         corpus("lastModified").as("lastModified"),
-        corpus("spans").as("spans"))
-      .persist()
+        corpus("spans").as("spans")))
 
     // HTTP redirect classification (reference `auto_redirect`,
     // RiverWeb.java:302-303): a page whose spans carry a `redirect` span is
@@ -306,7 +336,7 @@ final class CrawlSession(
       .drop("children")
       .withColumn("@timestamp", lit(clock()))
     val docs =
-      if (config.mode == WriteMode.Default) docs0 else docs0.persist()
+      if (config.mode == WriteMode.Default) docs0 else scope.persist(docs0)
     // The docs-table commit touches only docsTable/docsIndexTable — fully
     // independent of the frontier/seen transition below — so it runs
     // CONCURRENTLY on a driver pool thread (guide §2.6: actions are only
@@ -316,9 +346,7 @@ final class CrawlSession(
     // durable, and a docs failure aborts the round before the flip, so
     // crash semantics are unchanged (frontier/seen snapshots without a
     // checkpoint are resume-ignored orphans by design).
-    val docsF = scala.concurrent.Future {
-      timed("docs-write")(writeDocs(writeShape(docs), writeShape))
-    }(CrawlSession.docsCommitEc)
+    val docsF = scope.commitDocs(writeDocs(writeShape(docs), writeShape))
 
     // --- children (X5 + S6 sitemaps + redirect remap) → J1 anti-join ---------
     // each branch carries its CHILD's depth: content/sitemap children are
@@ -340,42 +368,28 @@ final class CrawlSession(
           col("depth").as("cdepth"), col("url").as("parentUrl"))
     // persist: the seen-filter's bloom routing scans candidates twice
     // (definitely-new branch ∪ maybe-seen anti-join branch)
-    val cand = toCandidates(
+    val cand = scope.persist(toCandidates(
       scrapedChildren.unionByName(sitemapChildren).unionByName(redirectChildren),
-      col("cdepth"), col("parentUrl"), applyIncludeExclude = true)
-      .persist()
+      col("cdepth"), col("parentUrl"), applyIncludeExclude = true))
 
-    var releaseRoute: () => Unit = () => ()
-    val newEntries = timed("seen-route-build")(
+    // Below the floor the bloom route costs more than it saves: the
+    // incremental filter's per-round maintenance is one Spark job per new
+    // segment (stat.bloomFilter over it), and the routed plan adds a branch
+    // union — while the exact anti-join over a tiny seen set is a single
+    // cheap (SHJ-hinted) join. Up to the single-bloom ceiling, the
+    // incrementally merged bloom: O(new URLs last round), not O(seen).
+    // Above it the plain shuffled anti-join.
+    val newEntries =
       if (seen == null) cand
-      else config.seenRoute match {
-        case SeenRoute.Auto =>
-          // Below the floor the bloom route costs more than it saves: the
-          // incremental filter's per-round maintenance is one Spark job per
-          // new segment (stat.bloomFilter over it), and the routed plan
-          // adds a branch union — while the exact anti-join over a tiny
-          // seen set is a single cheap (SHJ-hinted) join. Above the floor,
-          // incrementally merged bloom: O(new URLs last round), not O(seen).
-          if (seenCount < AutoBloomMinItems)
-            SeenSet.filterNew(cand, seen, seenCount, maxBloomItems = 0L)
-          else {
-            val bloom =
-              if (seenCount <= AutoBloomMaxItems)
-                Some(seenBloom.forVersion(seenV, seenCount))
-              else None
-            SeenSet.filterNew(cand, seen, seenCount, prebuiltBloom = bloom)
-          }
-        case SeenRoute.Exact =>
-          SeenSet.filterNew(cand, seen, seenCount, maxBloomItems = 0L)
-        case SeenRoute.RangePartitioned(nRanges) =>
-          import spark.implicits._
-          val (out, release) = SeenSet.filterNewRangePartitioned(
-            cand.select("url", "urlHash", "host", "depth", "parentUrl")
-              .as[FrontierEntry],
-            seen, seenCount, nRanges)
-          releaseRoute = release
-          out.toDF().select(cand.columns.map(col): _*)
-      })
+      else if (seenCount < AutoBloomMinItems)
+        SeenSet.filterNew(cand, seen, seenCount, maxBloomItems = 0L)
+      else {
+        val bloom =
+          if (seenCount <= AutoBloomMaxItems)
+            Some(seenBloom.forVersion(seenV, seenCount))
+          else None
+        SeenSet.filterNew(cand, seen, seenCount, prebuiltBloom = bloom)
+      }
 
     // The new-entries write keys its single-file gate on the CLAIM count
     // (both branches of the bloom route read the persisted `cand`, so the
@@ -403,7 +417,7 @@ final class CrawlSession(
     // O(claim + new) write instead of rewriting the whole frontier
     // (SnapshotTable compacts copy-on-write once tombstones accumulate)
     val newProcessed = processed + claimedCount
-    val (newFv, frontierLeft) = timed("frontier-commit")(frontierTable.commitDeltaTo(
+    val (newFv, frontierLeft) = frontierTable.commitDeltaTo(
       fanoutShape(newEntries.select(frontier.columns.map(col): _*)),
       // tombstones read the persisted claim cache — coalesce merges the
       // tiny cache-scan tasks without repartition(1)'s extra exchange
@@ -413,22 +427,21 @@ final class CrawlSession(
         "claimed" -> claimedCount.toString),
       // tombstones are exactly the claim batch (1:1) — the exact hint lets
       // the store overlap the tombstone and segment writes
-      tombstoneRowsHint = claimedCount))
+      tombstoneRowsHint = claimedCount)
     // delta path: frontier segment newFv IS exactly newEntries — the seen
     // table references those files instead of writing the rows again
     // (halves per-round new-URL write bytes). Compaction path: the segment
     // folds the whole frontier, so fall back to a direct write.
-    val (newSv, seenTotal) = timed("seen-commit")(
+    val (newSv, seenTotal) =
       if (frontierTable.tombstonesOf(newFv).nonEmpty)
         seenTable.commitAppendRef(
           s"${frontierTable.root}/segments/$newFv", seenV,
           Map("round" -> (round + 1).toString))
       else seenTable.commitAppendTo(
         fanoutShape(newEntries.select("urlHash", "url")), seenV,
-        Map("round" -> (round + 1).toString)))
+        Map("round" -> (round + 1).toString))
     // both commits must be durable before the round becomes visible
-    val docsWritten = scala.concurrent.Await.result(
-      docsF, scala.concurrent.duration.Duration.Inf)
+    val docsWritten = Await.result(docsF, Duration.Inf)
     // the round becomes visible HERE — one atomic rename for both tables
     writeCheckpoint(newFv, newSv)
     // new-URL count comes free from the seen-commit's segment metric
@@ -442,9 +455,6 @@ final class CrawlSession(
         .select("url", "depth").collect()
         .map(r => (r.getString(0), r.getInt(1)))
 
-    claimed.unpersist(); fetched.unpersist(); cand.unpersist()
-    if (config.mode != WriteMode.Default) docs.unpersist()
-    releaseRoute()
     log(s"round ${round + 1}: claimed=$claimedCount docs=$docsWritten " +
       s"new=$newUrls frontier=$frontierLeft seen=$seenTotal processed=$newProcessed")
     Some(RoundResult(round + 1, claimedCount, docsWritten, newUrls,
@@ -603,17 +613,6 @@ final class CrawlSession(
 
   private def log(msg: String): Unit =
     if (sys.env.get("GRAFT_QUIET").isEmpty) println(s"[crawl ${config.sessionId}] $msg")
-
-  // GRAFT_PROF=1: per-phase wall times of a round, for overhead hunting
-  private val prof = sys.env.contains("GRAFT_PROF")
-  private def timed[A](label: String)(f: => A): A =
-    if (!prof) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[prof ${config.sessionId}] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 }
 
 /** X3 driver-side lifecycle hooks (no executor involvement — the reference
@@ -656,14 +655,13 @@ object CrawlSession {
         val t = new Thread(r, "graft-docs-commit"); t.setDaemon(true); t
       }))
 
-  /** single-bloom ceiling for the Auto seen route (matches
+  /** single-bloom ceiling for the seen route (matches
     * [[graft.frontier.SeenSet.filterNew]]'s default `maxBloomItems`; beyond
-    * it the route falls back to the plain shuffled anti-join, and the
-    * range-partitioned route is the explicit upgrade path).
+    * it the route falls back to the plain shuffled anti-join).
     */
   private[graft] val AutoBloomMaxItems = 50000000L
 
-  /** Auto-route floor: below this seen-set size the plain exact anti-join
+  /** Seen-route floor: below this seen-set size the plain exact anti-join
     * (SHJ-hinted, one small build) beats the bloom route's per-round
     * segment-bloom job + two-branch plan. Routing on the KNOWN seen count
     * — no extra job either way.

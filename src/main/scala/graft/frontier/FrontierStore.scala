@@ -437,9 +437,6 @@ object SnapshotTable {
     */
   val MaxTombRows: Long = 1000000L
 
-  def apply(root: String)(implicit spark: SparkSession): SnapshotTable =
-    new SnapshotTable(root, spark)
-
   /** Files.list with the stream closed (it holds a directory fd open —
     * leaking one per commit starves a long-running daemon of fds).
     */

@@ -40,18 +40,9 @@ object EventOps {
     * plain form — watermarks bound its state instead, and an eager
     * pre-count is impossible on an unbounded stream.
     */
-  /** `maxGroupHint` (0 = unset): caller-supplied upper bound on the
-    * largest per-user event count — from table stats, the previous run,
-    * or domain knowledge. When set, the router compares IT against
-    * `hotUserThreshold` instead of running the eager pre-count scan
-    * (at corpus scale that scan is a full extra read per call; both
-    * routes are output-identical, so an inexact hint can only cost
-    * performance, never correctness).
-    */
   def sessionize(events: DataFrame, gapSeconds: Long = 1800L,
       userCol: String = "user_id", tsCol: String = "ts",
-      hotUserThreshold: Long = 1048576L,
-      maxGroupHint: Long = 0L): DataFrame = {
+      hotUserThreshold: Long = 1048576L): DataFrame = {
     // parquet event times arrive as TIMESTAMP_NTZ; with the engine-wide
     // UTC session zone this cast is wall-clock exact, and unix_micros /
     // session_window require TIMESTAMP. An already-TIMESTAMP column is
@@ -64,12 +55,9 @@ object EventOps {
     val routeBucketed =
       !evs.isStreaming && hotUserThreshold > 0 &&
         hotUserThreshold < Long.MaxValue && {
-          if (maxGroupHint > 0L) maxGroupHint > hotUserThreshold
-          else {
-            val m = evs.groupBy(col(userCol)).count()
-              .agg(max(col("count"))).head().get(0)
-            m != null && m.asInstanceOf[Long] > hotUserThreshold
-          }
+          val m = evs.groupBy(col(userCol)).count()
+            .agg(max(col("count"))).head().get(0)
+          m != null && m.asInstanceOf[Long] > hotUserThreshold
         }
     if (routeBucketed)
       sessionizeBucketed(evs, gapSeconds,
@@ -248,22 +236,17 @@ object EventOps {
   def funnel(events: DataFrame, steps: Seq[String],
       userCol: String = "user_id", tsCol: String = "ts",
       typeCol: String = "event_type",
-      hotUserThreshold: Long = 1048576L,
-      maxGroupHint: Long = 0L): DataFrame = {
+      hotUserThreshold: Long = 1048576L): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
     val k = steps.length
     val stepsArr = array(steps.map(lit): _*)
     val stepped = events.filter(col(typeCol).isin(steps: _*))
-    // maxGroupHint: see [[sessionize]] — skips the eager pre-count scan
     val routeBucketed =
       !events.isStreaming && hotUserThreshold > 0 &&
         hotUserThreshold < Long.MaxValue && {
-          if (maxGroupHint > 0L) maxGroupHint > hotUserThreshold
-          else {
-            val m = stepped.groupBy(col(userCol)).count()
-              .agg(max(col("count"))).head().get(0)
-            m != null && m.asInstanceOf[Long] > hotUserThreshold
-          }
+          val m = stepped.groupBy(col(userCol)).count()
+            .agg(max(col("count"))).head().get(0)
+          m != null && m.asInstanceOf[Long] > hotUserThreshold
         }
     if (routeBucketed)
       return funnelBucketed(events, steps, bucketSeconds = 86400L,
@@ -424,16 +407,11 @@ object EventOps {
     */
   def valueQuantiles(events: DataFrame, typeCol: String = "event_type",
       valueCol: String = "value", idCol: String = "event_id",
-      maxSortGroup: Long = 4194304L,
-      maxGroupHint: Long = 0L): DataFrame = {
-    // maxGroupHint: see [[sessionize]] — skips the eager pre-count scan
+      maxSortGroup: Long = 4194304L): DataFrame = {
     val useHistogram = maxSortGroup <= 0 || (maxSortGroup < Long.MaxValue && {
-      if (maxGroupHint > 0L) maxGroupHint > maxSortGroup
-      else {
-        val m = events.groupBy(col(typeCol)).count()
-          .agg(max(col("count"))).head().get(0)
-        m != null && m.asInstanceOf[Long] > maxSortGroup
-      }
+      val m = events.groupBy(col(typeCol)).count()
+        .agg(max(col("count"))).head().get(0)
+      m != null && m.asInstanceOf[Long] > maxSortGroup
     })
     if (useHistogram) valueQuantilesHistogram(events, typeCol, valueCol)
     else valueQuantilesSorted(events, typeCol, valueCol, idCol)

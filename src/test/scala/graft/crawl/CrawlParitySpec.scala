@@ -88,21 +88,6 @@ class CrawlParitySpec extends AnyFunSuite {
     session.cleanup()
   }
 
-  test("seen-route invariance: exact / broadcast / range-partitioned routes " +
-      "give identical crawl order + seen set") {
-    val oracle = Oracle.crawl(pagesMap, robotsMap, baseConfig("route-oracle"))
-    Seq(
-      "exact" -> SeenRoute.Exact,
-      "range" -> SeenRoute.RangePartitioned(nRanges = 7)).foreach {
-      case (name, route) =>
-        val cfg = baseConfig(s"route-$name").copy(seenRoute = route)
-        val (engine, engineSeen, session) = runEngine(cfg)
-        assert(engine.crawlOrder == oracle.crawlOrder, s"route $name order")
-        assert(engineSeen == oracle.seen, s"route $name seen set")
-        session.cleanup()
-    }
-  }
-
   test("crash between a round's two table commits: resume ignores orphan snapshots") {
     val cfg = baseConfig("crash")
     val dir = TestSpark.tmpDir("crawl-crash")
@@ -125,6 +110,19 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(fullOrder == oracle.crawlOrder)
     assert(!rest.crawlOrder.exists(_._1.contains("orphan")))
     s2.cleanup()
+  }
+
+  test("a failed round releases the intermediates it persisted") {
+    // exclude patterns apply to children only, so seeding succeeds and the
+    // malformed regex fails round 1 after its claim is persisted
+    val cfg = baseConfig("leak").copy(excludeUrls = Seq("("))
+    val dir = TestSpark.tmpDir("crawl-leak")
+    val session = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(), dir)
+    corpusDf.count() // the shared corpus cache is not the round's to release
+    val before = spark.sparkContext.getPersistentRDDs.size
+    intercept[Exception](session.run())
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    session.cleanup()
   }
 
   test("politeness budget: ≤ hostBudget claims per host per round (W2/Z1)") {

@@ -38,27 +38,28 @@ class SeenSetSpec extends AnyFunSuite {
     assert(got == trulyNew)
   }
 
-  test("range-partitioned bloom path equals the exact anti-join (10^10 route)") {
-    import graft.model.FrontierEntry
-    def entries(urls: Seq[String]) = urls.map(u =>
-      FrontierEntry(u, UrlOps.urlHash(u), UrlOps.host(u), 1, "p"))
-    val seen = urlsDf(seenUrls)
-    val cand = spark.createDataset(entries(candUrls))(
-      org.apache.spark.sql.Encoders.product[FrontierEntry]).persist()
-    // urlsDf hashes with xxhash64(col) == UrlOps.urlHash — same function
-    val (got8, release8) = SeenSet.filterNewRangePartitioned(cand, seen,
-      seenUrls.size.toLong,
-      nRanges = 8, fpp = 0.2) // high fpp: force plenty of exact-join fallthrough
-    val got = got8.collect().map(_.url).toSet
-    release8()
-    assert(got == trulyNew)
-    // ranges with no seen rows must still pass candidates through
-    val (gotMany, releaseMany) = SeenSet.filterNewRangePartitioned(cand, seen,
-      seenUrls.size.toLong, nRanges = 512)
-    val gotManyRanges = gotMany.collect().map(_.url).toSet
-    releaseMany()
-    assert(gotManyRanges == trulyNew)
+  test("prebuilt bloom route equals the exact anti-join at every seen version") {
+    // the crawl's route from AutoBloomMinItems up: one filter advanced over
+    // each appended segment, one of which adds zero URLs
+    val t = new SnapshotTable(TestSpark.tmpDir("seen-prebuilt"), spark)
+    val bloom = new IncrementalSeenBloom(t)
+    val cand = urlsDf(candUrls).persist() // bloom routing requires materialized input
+    def urls(df: org.apache.spark.sql.DataFrame) =
+      df.select("url").collect().map(_.getString(0)).toSet
+    var v = -1L
+    Seq(0 until 800, 800 until 1600, 1600 until 1600, 1600 until 2000).foreach { ids =>
+      val (nv, n) = t.commitAppendTo(urlsDf(ids.map(seenUrls)), v)
+      v = nv
+      val seen = t.readVersion(v)
+      val routed = SeenSet.filterNew(cand, seen, n,
+        prebuiltBloom = Some(bloom.forVersion(v, n)))
+      assert(urls(routed) == urls(SeenSet.filterNew(cand, seen, n, maxBloomItems = 0L)),
+        s"seen version $v")
+    }
+    assert(urls(SeenSet.filterNew(cand, t.readVersion(v), t.rowsOf(v),
+      prebuiltBloom = Some(bloom.forVersion(v, t.rowsOf(v))))) == trulyNew)
     cand.unpersist()
+    t.drop()
   }
 
   test("hash collisions do not conflate distinct urls (url participates in the join)") {

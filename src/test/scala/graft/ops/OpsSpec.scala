@@ -1466,45 +1466,6 @@ class EventOpsSpec extends AnyFunSuite {
     assert(routed == plain)
   }
 
-  test("stats-hint router: a maxGroupHint skips the eager pre-count scan and routes by the hint") {
-    val rows = ((0 until 200).map(i => ev(1L, i * 30000000L)) ++
-      (0 until 10).map(i => ev(2L, i * 400000000L))).toDF("user_id", "ts")
-    def set(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    // hint above the threshold → bucketed; below → plain; both ≡ plain output
-    val plain = set(EventOps.sessionize(rows, gapSeconds = 60L,
-      hotUserThreshold = Long.MaxValue))
-    assert(set(EventOps.sessionize(rows, gapSeconds = 60L,
-      hotUserThreshold = 50L, maxGroupHint = 200L)) == plain)
-    assert(set(EventOps.sessionize(rows, gapSeconds = 60L,
-      hotUserThreshold = 50L, maxGroupHint = 40L)) == plain)
-    // NO JOB may run at plan-build time when hinted: a poisoned user column
-    // throws on ANY row evaluation, so the eager pre-count raises on the
-    // unhinted call while the hinted call builds a lazy plan untouched
-    val poisoned = rows.withColumn("user_id",
-      raise_error(lit("pre-count ran")).cast("long"))
-    EventOps.sessionize(poisoned, gapSeconds = 60L,
-      hotUserThreshold = 50L, maxGroupHint = 200L) // lazy — must NOT throw
-    intercept[Exception] {
-      EventOps.sessionize(poisoned, gapSeconds = 60L, hotUserThreshold = 50L)
-    } // the unhinted router's pre-count evaluates the column eagerly
-    // funnel + quantiles: hinted forms equal their unhinted twins
-    val evs = rows.withColumn("event_type",
-      concat(lit("s"), (pmod(col("user_id"), lit(2)) + 1).cast("string")))
-    assert(
-      EventOps.funnel(evs, Seq("s1", "s2"), hotUserThreshold = 50L,
-        maxGroupHint = 200L).collect().toSet ==
-      EventOps.funnel(evs, Seq("s1", "s2"),
-        hotUserThreshold = Long.MaxValue).collect().toSet)
-    val vals = rows.withColumn("event_type", lit("t"))
-      .withColumn("value", (col("user_id") * 7 % 13).cast("double"))
-      .withColumn("event_id", monotonically_increasing_id())
-    assert(
-      EventOps.valueQuantiles(vals, maxSortGroup = 50L, maxGroupHint = 200L)
-        .collect().toSet ==
-      EventOps.valueQuantilesHistogram(vals).collect().toSet)
-  }
-
   test("retention floors pre-1970 days like DuckDB's // (not truncating div)") {
     val day = 86400000000L
     // the ev() helper assumes non-negative µs; build pre-epoch instants directly
